@@ -171,13 +171,7 @@ object Bench {
     // turn 0: warmup + start sentinel (inside the lockstep so neither
     // side's timed turns overlap the other's warmup compute)
     val calStart = withTurn(0) {
-      // touch every corpus table once (untimed) so first timed runs measure
-      // compute, not cold page cache — an OS-cold read of the large tables
-      // once inflated shuffle-heavy queries ~10x on this box
-      Graft.tableNames.foreach { t =>
-        try Graft.table(spark, sfDir, t).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-      }
+      Graft.warmCorpus(spark, sfDir)
       // JVM/codegen warmup on the first headline query (untimed)
       runOnce(headline.head)
       calibrate()

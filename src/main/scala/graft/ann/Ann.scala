@@ -45,8 +45,8 @@ object Ann {
   /** Build a model-kernel expression over `v.cast("array<double>")` and
     * wrap it as a Column — the construction path for the ANN quantizer
     * kernels (graft.functions.AnnKernels), whose Broadcast model handle
-    * cannot ride the SQL function registry. Package-visible: AnnProbe
-    * and AnnKernelSpec build the same columns through this one helper.
+    * cannot ride the SQL function registry. Package-visible so
+    * AnnKernelSpec builds the same columns through this one helper.
     */
   private[graft] def kernelCol(
       build: org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression,

@@ -790,8 +790,9 @@ object Dedup {
     // the two consumers' pruned copies differ, so without
     // materialization the tokenize+posexplode scan plans twice (the
     // dsirWeightsTagged lesson). One lazy local checkpoint makes the
-    // segment pass once-per-call (r19 optimization, guide §2.4;
-    // BoilerProbe same-JVM A/B at sf0.1: 1.14 → 0.89 s, equal output).
+    // segment pass once-per-call (r19 optimization, guide §2.4; same-JVM
+    // A/B at sf0.1 in OPTIMIZATION_r19.md: 1.14 → 0.89 s, equal output;
+    // plans/r19 dd_boilerplate: 8 → 2 scans).
     val segs = base.select(col("_doc"), posexplode(segArr).as(Seq("line_idx", "line")))
       .localCheckpoint(false)
     // df ≥ max(ceil(maxDfFrac·N), 2): a line must repeat across at
@@ -991,10 +992,12 @@ object Dedup {
                                  sets: DataFrame)
     : (DataFrame, (Column, Column) => Column) = {
     val toksType = sets.schema("toks").dataType
+    // both branches narrow to (vid, toks): an extra column on `sets` would
+    // otherwise ride through both joins into the verify output's schema
     if (isLongArray(toksType) && spark.catalog.functionExists("inter_size_sorted"))
       (sets.select(col("vid"), sort_array(col("toks")).as("toks")),
         (a, b) => coalesce(call_function("inter_size_sorted", a, b), lit(-1)))
-    else (sets, (a, b) => interSize(spark, toksType, a, b))
+    else (sets.select(col("vid"), col("toks")), (a, b) => interSize(spark, toksType, a, b))
   }
 
   /** The verify stage of [[verifyJaccard]] over an ALREADY-BUILT (vid,
@@ -1165,9 +1168,6 @@ object Dedup {
         case None => sc.setCheckpointDir(d)
       }
     }
-    // auto-reliable: a session that configured a checkpoint store gets
-    // executor-loss-proof rounds without opting in per call
-    val reliable = checkpointDir.isDefined || existingDir.isDefined
     // `pairs` is referenced twice (the undirected union swaps the
     // columns — two different projections, so ReuseExchange cannot
     // deduplicate them) and is typically the LAZY tail of a whole
@@ -1190,10 +1190,7 @@ object Dedup {
     // the materialized partitions, keeping every round's plan constant-
     // size.
     //
-    // Superseded rounds are released EXPLICITLY via their checkpointed
-    // RDDs (unpersist + reliable-file delete) — relying on GC +
-    // ContextCleaner would hold O(rounds) full label copies in executor
-    // storage / the checkpoint store mid-algorithm.
+    // Superseded rounds are released explicitly (graft.RoundCheckpoint).
     // LAZY local checkpoints (r18 optimization, guide §1.2): eager
     // materialization cost one scheduled job per checkpoint — 3 jobs per
     // round (stepped, next, convergence probe) of mostly scheduling
@@ -1205,19 +1202,10 @@ object Dedup {
     // release contract are unchanged. Reliable mode stays EAGER: an
     // un-persisted RDD.checkpoint() re-runs the computation at
     // materialization, and executor-loss-safety is the mode's point.
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(eager = false)
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    def release(df: DataFrame): Unit = ckptRdd(df).foreach { r =>
-      r.unpersist(blocking = false)
-      if (reliable) r.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      }
-    }
+    // auto-reliable: a session with a checkpoint dir (configured before
+    // this call, or set above from `checkpointDir`) gets executor-loss-
+    // proof rounds without opting in per call
+    val ckpt = new graft.RoundCheckpoint(pairs.sparkSession, eagerLocal = false)
     // Loop parallelism proportional to the measured edge volume (~64k
     // edges per reducer), clamped at the session's configured width: a
     // 100 TB pair set keeps every reducer, while a small candidate graph
@@ -1297,8 +1285,8 @@ object Dedup {
       // checkpoints, so jobs per round stay 1 with one less join+shuffle
       // inside.
       val sumNow = next.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      release(labels)
-      release(stepped)
+      ckpt.release(labels)
+      ckpt.release(stepped)
       labels = next
       converged =
         if (sumNow == null) true // empty label frame: nothing to propagate
@@ -1433,10 +1421,10 @@ object Dedup {
     // r19 audit (guide §1.1 — measured and REJECTED): a
     // distinct-pairs-before-verify form (slim (vh, doc) self-join,
     // strings joined back once per distinct pair, DP once per pair)
-    // LOSES same-JVM at sf0.1 — FuzzyProbe best-of-4 1.28 s (this form)
-    // vs 2.00 s (that form). At maxDist = 1 the threshold-bounded DP
-    // over ~18-char names is a few dozen ops, nearly every
-    // shared-variant pair passes it (262.5k verified pairs), and the
+    // LOSES same-JVM at sf0.1 — best-of-4 1.28 s (this form) vs 2.00 s
+    // (that form), OPTIMIZATION_r19.md. At maxDist = 1 the
+    // threshold-bounded DP over ~18-char names is a few dozen ops, nearly
+    // every shared-variant pair passes it (262.5k verified pairs), and the
     // short strings are cheap on the wire — so the pre-distinct saves
     // almost no DP work while adding two joins. The r18 shape stands.
     val variantsAll = docs

@@ -42,8 +42,8 @@ final case class BpeModel(merges: Seq[(String, String)])
   * divergent one). Subword count = number of `<` markers left. The
   * chain's apply cost is O(nMerges × doc length) — fine as a witness at
   * tens-to-hundreds of merges, which is why the kernel is the default
-  * (BpeProbe measures the flat-vs-linear curve; FunctionsSpec pins
-  * kernel == chain).
+  * (SCALE.md records the measured flat-vs-linear curve; FunctionsSpec
+  * pins kernel == chain).
   */
 object Bpe {
 
@@ -262,19 +262,19 @@ object Bpe {
       BpeSubwordCount(org.apache.spark.sql.graft.ColumnBridge.expression(text),
         modelBroadcast(model)))
 
-  /** The digit-enrichment device `txt_bpe_big`, BpeProbe, ScaleCheck and
+  /** The digit-enrichment device `txt_bpe_big`, ScaleCheck and
     * FunctionsSpec share: append the doc id and a portable pseudo-hash
     * digit token so the synthetic corpus's 31-word vocabulary gains the
     * long-tail pair structure a real corpus has (measured capacity
     * ≥ 1300 merges at the smallest SF). ONE definition plus its SQL twin
-    * — the certified query, the probes and the scale case stay in
+    * — the certified query, the tests and the scale case stay in
     * lockstep by construction.
     */
   def enrichWithIdTokens(df: DataFrame, id: String = "doc_id",
                          text: String = "text", out: String = "btext"): DataFrame =
     // (ADVICE r11) reduce the id mod p BEFORE the multiply: pmod keeps the
     // product < 1e9 * 2.65e9 ≈ 2.65e18 < Long.MaxValue, so replica-offset
-    // ids (~1e12) in the probes/ScaleCheck no longer wrap to negative
+    // ids (~1e12) in ScaleCheck no longer wrap to negative
     // digit tokens. For ids < p the value is unchanged — the certified
     // small-SF query and its oracle are bit-identical.
     df.withColumn(out, concat(col(text), lit(" "), col(id).cast("string"), lit(" "),
@@ -308,8 +308,8 @@ object Bpe {
     * only (no document text): a 32k-merge DuckDB chain oracle scans the
     * apply text nMerges times, so the certified apply text stays a few
     * hundred bytes while the merge list is full production size — the
-    * KERNEL is flat in merges either way (BpeProbe measures it on the
-    * full-text corpus).
+    * KERNEL is flat in merges either way (SCALE.md's r12 flatness table
+    * measures it on the full-text corpus: 32768/64 merges = 0.60x).
     */
   def digitTokens(df: DataFrame, k: Int, id: String = "doc_id",
                   out: String = "dtext"): DataFrame = {

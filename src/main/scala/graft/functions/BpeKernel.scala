@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * with the no-ops skipped. This makes NO assumption about the merge
   * list (no reliance on the training invariant), so it is chain-equal
   * for any frozen model; FunctionsSpec pins kernel == chain on the real
-  * corpus and BpeProbe measures the flat-vs-linear curve.
+  * corpus and SCALE.md records the measured flat-vs-linear curve.
   *
   * Tokenization matches the wrapped form byte-for-byte: `lower(text)`
   * via `UTF8String.toLowerCase` (the same call Spark's `lower` makes),

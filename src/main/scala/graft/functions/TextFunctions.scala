@@ -639,7 +639,8 @@ object TextFunctions {
     * Output identical to `dsirWeights(raw, raw.where(isTarget), ...)`
     * (bucket counts aggregate the same rows, just flagged instead of
     * re-scanned; equality pinned in FunctionsSpec). Same-JVM A/B at
-    * sf0.1 (DsirProbe): 1.42 → 0.70 s.
+    * sf0.1 (OPTIMIZATION_r19.md): 1.42 → 0.70 s; plans/r19 pp_dsir:
+    * 15 → 3 parquet scans.
     */
   def dsirWeightsTagged(raw: org.apache.spark.sql.DataFrame, isTarget: Column,
                         id: String, text: String,

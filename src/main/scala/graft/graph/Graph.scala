@@ -167,20 +167,7 @@ object Graph {
     */
   private def iterate(e: DataFrame, base: DataFrame, iterations: Int,
                       microScale: Long, damping: Int): DataFrame = {
-    val sc = base.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.unpersist(blocking = false)
-        if (reliable) r.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-        }
-      }
+    val ckpt = new graft.RoundCheckpoint(base.sparkSession, eagerLocal = true)
     val ckptEvery = 8
     var ranks = base.select(col("node"), lit(microScale).as("r"))
     var prev: Option[DataFrame] = None
@@ -190,7 +177,7 @@ object Graph {
         ranks =
           if (i % ckptEvery == 0 || i == iterations) {
             val materialized = ckpt(next)
-            prev.foreach(release)
+            prev.foreach(ckpt.release)
             prev = Some(materialized)
             materialized
           } else next
@@ -224,20 +211,7 @@ object Graph {
       .persist(MEMORY_AND_DISK)
     val nEdges = und.count() // force once, before round-1 plans race to build it twice
     val base = nodes.select(col("node"))
-    val sc = base.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach { r =>
-        r.unpersist(blocking = false)
-        if (reliable) r.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-        }
-      }
+    val ckpt = new graft.RoundCheckpoint(base.sparkSession, eagerLocal = true)
     // labels is referenced TWICE per round (the neighbor join and the
     // zero-fill join), so an un-checkpointed round would RE-EXECUTE the
     // previous round's work once per reference — measured at sf0.1,
@@ -263,7 +237,7 @@ object Graph {
         labels =
           if (i % ckptEvery == 0 || i == iterations) {
             val materialized = ckpt(next)
-            prev.foreach(release)
+            prev.foreach(ckpt.release)
             prev = Some(materialized)
             materialized
           } else next

@@ -1040,7 +1040,7 @@ object PipelineQueries {
       // production-size merge list: 1024 merges through the trie-apply
       // kernel (BpeSubwordCount) — apply cost flat in nMerges, which is
       // the point (the replace chain would pay 16x the txt_bpe scans;
-      // BpeProbe measures the curve). The synthetic corpus's 31-word
+      // SCALE.md records the measured curve). The synthetic corpus's 31-word
       // vocabulary exhausts its pair structure at ~89 merges, so the
       // training/apply text appends the doc-id digit string — the
       // deterministic stand-in for the long-tail token diversity a real
@@ -1069,8 +1069,8 @@ object PipelineQueries {
       // words, measured pair capacity 34.7k ≥ 32768). Certified as
       // ENCODE — every token-id row under the full 32805-entry vocab —
       // with the apply text a 7-token SUBSET of the training corpus:
-      // the trie kernel is flat in merges either way (BpeProbe's 32k
-      // arm measures it on the full-text corpus), while the DuckDB
+      // the trie kernel is flat in merges either way (SCALE.md's r12
+      // flatness table measures it on the full-text corpus), while the DuckDB
       // chain oracle pays nMerges scans of the apply text, so the
       // certified text stays a few hundred bytes where the merge list
       // is full production size. 96 replaces/CTE-block clears both

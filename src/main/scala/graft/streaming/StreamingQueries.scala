@@ -42,8 +42,9 @@ object StreamingQueries {
     * is a reduction of input), clamped to [1, session width]: a 100 TB
     * ingest keeps the session's full width, while a bench-SF stream
     * stops paying per-trigger commit overhead for 32 near-empty state
-    * stores. Measured (StreamProbe2, sf0.1 events, complete-mode
-    * (user,day) agg): the HDFS-backed store's commit path contends
+    * stores. Measured in the round-18 optimization pass
+    * (OPTIMIZATION_r18.md; sf0.1 events, complete-mode (user,day) agg,
+    * per-trigger progress commit times): the HDFS-backed store's commit path contends
     * superlinearly in instance count — summed commitTimeMs 10.8-51 s at
     * 32 stores vs 0.6 s at 8 — and the trigger drops 1.7-2.4 s → 1.1 s;
     * the same state on tmpfs is NOT faster, so it is commit-path

@@ -568,6 +568,24 @@ class DedupAnnSpec extends GraftTest {
     }
   }
 
+  test("verifyJaccardWithSets narrows sets to (vid, toks) on both intersection paths") {
+    import spark.implicits._
+    // array<bigint> takes the sorted-merge kernel, array<string> the
+    // array_intersect fallback; an extra set column must reach neither
+    // output
+    val pairs = Seq((1L, 2L)).toDF("a", "b")
+    val longSets = Seq((1L, Seq(1L, 2L), "x"), (2L, Seq(2L, 3L), "y"))
+      .toDF("vid", "toks", "extra")
+    val strSets = Seq((1L, Seq("p", "q"), "x"), (2L, Seq("q", "r"), "y"))
+      .toDF("vid", "toks", "extra")
+    val viaLong = Dedup.verifyJaccardWithSets(pairs, longSets)
+    val viaStr = Dedup.verifyJaccardWithSets(pairs, strSets)
+    assert(viaLong.columns.toSeq === Seq("a", "b", "jaccard"))
+    assert(viaStr.schema === viaLong.schema)
+    assert(viaStr.collect().map(_.getDouble(2)).toSeq === Seq(0.3333))
+    assert(viaLong.collect().map(_.getDouble(2)).toSeq === Seq(0.3333))
+  }
+
   test("resolve keeps exactly one canonical doc per cluster and passes untouched docs through") {
     import spark.implicits._
     val corpus = Seq(1L, 2L, 3L, 10L, 11L, 99L).map(i => (i, s"text$i")).toDF("doc_id", "text")

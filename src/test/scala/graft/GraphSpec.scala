@@ -46,6 +46,48 @@ class GraphSpec extends GraftTest {
     assert(a.map(_._2).distinct.size > 10)
   }
 
+  test("reliable-checkpoint mode: same pageRank/labelPropagation rows, superseded rounds deleted") {
+    // a session checkpoint dir switches the loops from localCheckpoint to
+    // reliable checkpoints: a pure execution-strategy switch, and every
+    // superseded round's checkpoint files go as the loop advances — only
+    // the final round (which the returned frame reads) stays on disk
+    val docs = Graft.documents(spark, sf)
+    val nodes = docs.select(col("doc_id").as("node"))
+    val e = Graph.syntheticLinkGraph(docs)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    // 10 rounds: ckptEvery = 8 fires at round 8, then the final round 10
+    val prLocal = rows(Graph.pageRank(e, nodes, iterations = 10))
+    val lpLocal = rows(Graph.labelPropagation(e, nodes, iterations = 3))
+    val dir = java.nio.file.Files.createTempDirectory("graft-graphckpt-").toFile
+    try {
+      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      def rddDirs(): Set[String] =
+        Option(dir.listFiles()).toSeq.flatten.filter(_.isDirectory)
+          .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+          .filter(_.getName.startsWith("rdd-")).map(_.getPath).toSet
+      val before = rddDirs()
+      assert(rows(Graph.pageRank(e, nodes, iterations = 10)) === prLocal,
+        "checkpoint mode must not change pageRank")
+      val afterPr = rddDirs()
+      assert((afterPr -- before).size === 1,
+        s"pageRank left superseded checkpoints: ${afterPr -- before}")
+      assert(rows(Graph.labelPropagation(e, nodes, iterations = 3)) === lpLocal,
+        "checkpoint mode must not change labelPropagation")
+      val afterLp = rddDirs()
+      assert((afterLp -- afterPr).size === 1,
+        s"labelPropagation left superseded checkpoints: ${afterLp -- afterPr}")
+    } finally {
+      // SparkContext-global: clear it so later tests stay in local mode
+      // (null clears: SparkContext wraps in Option)
+      spark.sparkContext.setCheckpointDir(null)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
   test("syntheticLinkGraph: dst in range, distinct edges, outdeg 1..3") {
     val docs = Graft.documents(spark, sf)
     val n = docs.agg(max("doc_id")).head().getLong(0) + 1

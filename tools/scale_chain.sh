@@ -1,12 +1,16 @@
 #!/bin/bash
-# r19 measurement chain — SERIAL (appends SCALE.md; timings need an
-# uncontended box). 10x/100x arms for the r19 optimization ring
-# (VERDICT r18 #8): the pre-sorted inter_size verify (dd_ngram_jaccard),
-# the per-row MinHash signatures (dd_minhash), the components loop +
-# probe (dd_cc_pipeline), the graph loop sizing (g_pagerank, g_lpa), and
-# the tagged single-scan DSIR (pp_dsir).
+# Serial 10x/100x ScaleCheck arms: one ScaleCheck run per case argument,
+# each appending its rows to SCALE.md in the repo root. Run it with nothing
+# else on the machine (the timings need an uncontended box) and after a
+# compile (the JVMs load classes from target/scala-2.13/classes).
+#
+#   SPARK_GRAFT_SF_DIR=<corpus dir, sf0.1 for SCALE.md rows> \
+#     tools/scale_chain.sh <case>...
 set -e -o pipefail
-cd /root/repo
+: "${SPARK_GRAFT_SF_DIR:?set SPARK_GRAFT_SF_DIR to the corpus dir}"
+: "${SPARK_HOME:?set SPARK_HOME to the Spark installation}"
+[ $# -gt 0 ] || { echo "usage: tools/scale_chain.sh <case>..." >&2; exit 2; }
+cd "$(dirname "$0")/.."
 J=(java
   --add-opens=java.base/java.lang=ALL-UNNAMED
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
@@ -22,12 +26,11 @@ J=(java
   --add-opens=java.base/sun.security.action=ALL-UNNAMED
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx16g -Xss32m
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*")
+  -cp "target/scala-2.13/classes:$SPARK_HOME/jars/*")
 
-for c in dd_ngram_jaccard dd_minhash dd_cc_pipeline g_pagerank g_lpa pp_dsir; do
+for c in "$@"; do
   echo "=== 10x/100x arms: $c"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_SCALE_FACTORS=10,100 \
-    SPARK_GRAFT_SCALE_CASES=$c \
+  SPARK_GRAFT_SCALE_FACTORS=10,100 SPARK_GRAFT_SCALE_CASES="$c" \
     SPARK_GRAFT_SCALE_APPEND=1 "${J[@]}" graft.ScaleCheck 2>&1 | { grep -E "^\[scale\]|wrote" || true; }
 done
 echo "=== chain done"
