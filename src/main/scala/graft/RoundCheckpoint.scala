@@ -38,3 +38,44 @@ private[graft] final class RoundCheckpoint(spark: SparkSession, eagerLocal: Bool
       }
     }
 }
+
+/** Loop parallelism proportional to the measured edge volume, shared by
+  * the checkpointed graph loops (`Graph.pageRank`, `Graph.labelPropagation`,
+  * the `Dedup.connectedComponents` loop). Each round's joins/aggregations
+  * are separated from the next by a checkpoint, which defeats AQE's
+  * cross-round coalescing, so the loop width must be chosen up front:
+  * [[EdgesPerReducer]] edges per reducer, clamped at the session's
+  * configured width — a 100 TB edge list keeps every reducer, while a
+  * small graph stops paying (width × stages × rounds) task-scheduling
+  * overhead (measured at sf0.1: the four g_* entries each run ~2x faster
+  * with 1 loop partition than with 32).
+  */
+private[graft] object LoopParallelism {
+
+  /** Edges per loop reducer. Below this many edges a loop runs on one
+    * partition — the regime `Dedup.connectedComponents` solves on the
+    * driver instead.
+    */
+  val EdgesPerReducer: Long = 65536L
+
+  /** Run `body` with `spark.sql.shuffle.partitions` set to the loop
+    * width for `nEdges` and, at one partition, AQE off (nothing to
+    * coalesce or split; its stage-by-stage re-planning only adds latency
+    * to every round job). Both settings are restored in `finally`; the
+    * loops return checkpointed frames, so downstream consumers plan at
+    * the caller's width.
+    */
+  def apply[A](spark: SparkSession, nEdges: Long)(body: => A): A = {
+    val conf = spark.conf
+    val confParts = conf.get("spark.sql.shuffle.partitions")
+    val loopParts = math.max(1L, math.min(confParts.toLong, nEdges / EdgesPerReducer + 1L))
+    conf.set("spark.sql.shuffle.partitions", loopParts.toString)
+    val confAqe = conf.get("spark.sql.adaptive.enabled")
+    if (loopParts == 1L) conf.set("spark.sql.adaptive.enabled", "false")
+    try body
+    finally {
+      conf.set("spark.sql.shuffle.partitions", confParts)
+      conf.set("spark.sql.adaptive.enabled", confAqe)
+    }
+  }
+}

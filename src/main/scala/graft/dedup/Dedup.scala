@@ -1087,17 +1087,34 @@ object Dedup {
     * the resolution stage after pair generation: pairs chain into duplicate
     * CLUSTERS (a~b, b~c ⇒ {a,b,c}), and each document maps to its
     * cluster's canonical id (the minimum member id, so `comp` doubles as
-    * the keep-id). Output: (node, comp).
+    * the keep-id). Output: (node, comp), both in the input id type.
     *
-    * Algorithm: min-label propagation with path halving. Each round every
-    * node takes the minimum label among itself and its neighbors (join +
-    * hash aggregation, shuffles on node id), then labels pointer-jump
-    * (`comp ← comp(comp)`) so chains collapse exponentially — O(log
-    * diameter) rounds instead of O(diameter), the property that makes a
-    * 100 TB chain-shaped cluster converge in a handful of rounds. The
-    * driver sees only a one-row convergence probe per round, never the
-    * data; each round's result is persisted so lineage stays one round
-    * deep. `maxIter` bounds the worst case.
+    * Two regimes, chosen by the measured volume of the undirected edge
+    * list (both directions of every distinct pair):
+    *
+    *  - below [[graft.LoopParallelism.EdgesPerReducer]] (65,536) edges
+    *    with integral ids (`byte`/`short`/`int`/`long`), the edge list
+    *    is collected to the driver — at most 65,535 rows, ~1 MB, smaller
+    *    than a default broadcast — and solved by one union-find pass
+    *    (path compression, min-id root). The result is a local frame:
+    *    no rounds, no checkpoints, no session-conf changes, and it stays
+    *    recomputable. The suite's capped pair sets land here at the
+    *    benchmarked scales; the loop would run them on one reducer
+    *    anyway, paying a scheduled job and a checkpoint per round.
+    *  - otherwise (and for non-integral ids) the distributed loop below
+    *    runs, on a width proportional to the edge volume. The driver sees
+    *    only a one-row convergence probe per round, never the data.
+    *    `maxIter`, `saltBuckets` and the per-round checkpoints apply to
+    *    this loop only.
+    *
+    * Loop algorithm: min-label propagation with path halving. Each round
+    * every node takes the minimum label among itself and its neighbors
+    * (join + hash aggregation, shuffles on node id), then labels
+    * pointer-jump (`comp ← comp(comp)`) so chains collapse exponentially
+    * — O(log diameter) rounds instead of O(diameter), the property that
+    * makes a 100 TB chain-shaped cluster converge in a handful of rounds.
+    * Each round's result is checkpointed so lineage stays one round deep.
+    * `maxIter` bounds the worst case.
     *
     * `saltBuckets` (> 0 to enable) salts the path-halving self-join —
     * the round's skew point: every member of a duplicate cluster carries
@@ -1123,32 +1140,61 @@ object Dedup {
     * ([[graft.operators.Profiling.histogram]]) shows ≥10⁶-member
     * components.
     *
-    * `checkpointDir` picks the checkpoint mode. `None` (default) uses
-    * `localCheckpoint` — fastest, right for a single-box bench, but local
-    * checkpoint blocks die WITH their executor: on a preemptible cluster
-    * one lost executor fails the whole job mid-algorithm ("lineage has
-    * been truncated and cannot be recomputed"). `Some(dir)` switches
-    * every round to a RELIABLE `checkpoint` against that directory
-    * (HDFS/object store on a real cluster), which survives executor loss
-    * — the production mode. When `None` but the session ALREADY has a
-    * checkpoint dir configured (`sc.setCheckpointDir` at app setup), the
-    * reliable mode is used automatically — a session that paid for a
-    * checkpoint store wants its long iterative jobs loss-proof.
+    * `checkpointDir` picks the loop's checkpoint mode. `None` (default)
+    * uses `localCheckpoint` — fastest, right for a single-box bench, but
+    * local checkpoint blocks die WITH their executor: on a preemptible
+    * cluster one lost executor fails the whole job mid-algorithm
+    * ("lineage has been truncated and cannot be recomputed"). `Some(dir)`
+    * switches every round to a RELIABLE `checkpoint` against that
+    * directory (HDFS/object store on a real cluster), which survives
+    * executor loss — the production mode. When `None` but the session
+    * ALREADY has a checkpoint dir configured (`sc.setCheckpointDir` at
+    * app setup), the reliable mode is used automatically — a session that
+    * paid for a checkpoint store wants its long iterative jobs loss-proof.
     * Superseded rounds' checkpoint files are deleted eagerly so the
     * footprint stays at ~2 rounds of labels.
     *
-    * Side effects of `Some(dir)`: `sc.setCheckpointDir(dir)` is a
-    * SparkContext-global mutation that persists after this call and is
-    * only applied when no checkpoint dir is configured yet — passing a
+    * Side effects of `Some(dir)`, in both regimes: `sc.setCheckpointDir(dir)`
+    * is a SparkContext-global mutation that persists after this call and
+    * is only applied when no checkpoint dir is configured yet — passing a
     * DIFFERENT dir than the session's existing one throws rather than
-    * silently redirecting unrelated jobs' checkpoints. The final
-    * round's checkpoint files outlive the call (the returned DataFrame
-    * reads them); they are removed with the checkpoint dir's normal
-    * lifecycle, not eagerly.
+    * silently redirecting unrelated jobs' checkpoints. In the loop regime
+    * the final round's checkpoint files outlive the call (the returned
+    * DataFrame reads them); they are removed with the checkpoint dir's
+    * normal lifecycle, not eagerly.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           checkpointDir: Option[String] = None,
                           saltBuckets: Int = 0): DataFrame = {
+    val (edges, nEdges) = componentEdges(pairs, checkpointDir)
+    if (nEdges < graft.LoopParallelism.EdgesPerReducer && driverIdTypes(edges.schema("src").dataType))
+      componentsOnDriver(edges)
+    else componentsRounds(edges, nEdges, maxIter, saltBuckets)
+  }
+
+  /** The distributed label-propagation loop of [[connectedComponents]]
+    * at any edge volume — the loop regime's test entry (small graphs
+    * would otherwise take the driver path).
+    */
+  private[graft] def connectedComponentsLoop(pairs: DataFrame, maxIter: Int = 20,
+                                             checkpointDir: Option[String] = None,
+                                             saltBuckets: Int = 0): DataFrame = {
+    val (edges, nEdges) = componentEdges(pairs, checkpointDir)
+    componentsRounds(edges, nEdges, maxIter, saltBuckets)
+  }
+
+  /** Id types the driver regime handles: integral, so the round trip
+    * through `long` is lossless. */
+  private val driverIdTypes: Set[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types._
+    Set(ByteType, ShortType, IntegerType, LongType)
+  }
+
+  /** Checkpoint-dir validation plus the persisted, counted undirected
+    * edge list (src, dst) shared by both regimes.
+    */
+  private def componentEdges(pairs: DataFrame,
+                             checkpointDir: Option[String]): (DataFrame, Long) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sc = pairs.sparkSession.sparkContext
     val existingDir = sc.getCheckpointDir
@@ -1182,6 +1228,60 @@ object Dedup {
     val edges = p.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(p.select(col("b").as("src"), col("a").as("dst")))
       .distinct().persist(MEMORY_AND_DISK)
+    // The count picks the regime and the loop width, and forces the edge
+    // persist ONCE — before the driver collect or round-1 plans would
+    // otherwise race to build it twice.
+    val nEdges = edges.count()
+    p.unpersist(blocking = false) // edges are materialized; the pair cache is done
+    (edges, nEdges)
+  }
+
+  /** Driver regime: union-find over the collected (cached) edge list.
+    * Nodes are the sorted distinct `src` ids, so the min-index root of a
+    * set is its min id. A null id (never joined by the loop) keeps its
+    * own null row, as in the loop.
+    */
+  private def componentsOnDriver(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val idField = edges.schema("src")
+    val rows = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+    edges.unpersist(blocking = false)
+    val hasNull = rows.exists(_.isNullAt(0))
+    val ids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toArray.sorted.distinct
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val nx = parent(j); parent(j) = r; j = nx }
+      r
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val x = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val y = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (x < y) parent(y) = x else if (y < x) parent(x) = y
+      }
+    }
+    val back: Long => Any = idField.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val out = new java.util.ArrayList[Row](ids.length + 1)
+    if (hasNull) out.add(Row(null, null))
+    ids.indices.foreach(i => out.add(Row(back(ids(i)), back(ids(find(i))))))
+    val schema = StructType(Seq("node", "comp").map(StructField(_, idField.dataType, idField.nullable)))
+    edges.sparkSession.createDataFrame(out, schema)
+  }
+
+  /** Loop regime over the persisted, counted edge list (see
+    * [[connectedComponents]]).
+    */
+  private def componentsRounds(edges: DataFrame, nEdges: Long, maxIter: Int,
+                               saltBuckets: Int): DataFrame = {
     // Checkpoint (not persist) after every round: each round's plan
     // references the previous round's frame multiple times, so WITHOUT
     // lineage truncation the LOGICAL plan grows ~4^rounds and the
@@ -1203,103 +1303,87 @@ object Dedup {
     // un-persisted RDD.checkpoint() re-runs the computation at
     // materialization, and executor-loss-safety is the mode's point.
     // auto-reliable: a session with a checkpoint dir (configured before
-    // this call, or set above from `checkpointDir`) gets executor-loss-
-    // proof rounds without opting in per call
-    val ckpt = new graft.RoundCheckpoint(pairs.sparkSession, eagerLocal = false)
-    // Loop parallelism proportional to the measured edge volume (~64k
-    // edges per reducer), clamped at the session's configured width: a
-    // 100 TB pair set keeps every reducer, while a small candidate graph
-    // stops paying (width × stages × rounds) task-scheduling overhead —
-    // the checkpoint boundaries defeat AQE's cross-round coalescing, so
-    // the width must be chosen here. The count also forces the edge
-    // persist ONCE, before round-1 plans would otherwise race to build
-    // it twice. Session-conf override, restored in `finally` (the
-    // returned frame is checkpointed, so downstream consumers plan at
-    // the caller's width).
-    val nEdges = edges.count()
-    p.unpersist(blocking = false) // edges are materialized; the pair cache is done
-    val conf = pairs.sparkSession.conf
-    val confParts = conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(confParts.toLong, nEdges / 65536L + 1L))
-    conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // At loopParts == 1 there is nothing for AQE to adapt (no partitions
-    // to coalesce, no skew to split) and its stage-by-stage re-planning
-    // adds scheduling latency to every round job — disable it for the
-    // loop, restore after (r18 optimization). Any loop wider than one
-    // partition keeps AQE: that is the regime where its coalescing and
-    // skew handling earn their cost.
-    val confAqe = conf.get("spark.sql.adaptive.enabled")
-    if (loopParts == 1L) conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-    var labels = ckpt(edges.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node")))
-    var converged = false
-    var i = 0
-    // previous round's label sum for the monotone convergence probe
-    // below; null = "no round measured yet" (and the sum of an EMPTY
-    // label frame, which the null==null clause treats as converged —
-    // the old any-changed probe also stopped after one round there)
-    var prevSum: java.math.BigDecimal = null
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("comp").as("nbr_comp")), "dst")
-        .groupBy(col("src").as("node")).agg(min("nbr_comp").as("nbr_comp"))
-      val stepped = ckpt(labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp")))
-      // path halving: jump each label to its label's label (comp is always
-      // itself a node id, and labels only decrease, so this preserves
-      // reachability while halving chain lengths). With saltBuckets > 0
-      // the self-join spreads each comp's join group over saltBuckets
-      // tasks (see scaladoc) — identical result, skew-proof shuffle.
-      val halved =
-        if (saltBuckets <= 0)
-          stepped.as("x")
-            .join(stepped.select(col("node").as("c"), col("comp").as("cc")),
-              col("x.comp") === col("c"), "left")
-        else {
-          val lhs = stepped.as("x")
-            .withColumn("_sl", pmod(xxhash64(col("x.node")), lit(saltBuckets)))
-          // replicate only label rows some lhs comp actually references:
-          // dropping a rhs row whose node is nobody's comp changes
-          // nothing (it could never match), and once clusters collapse
-          // the referenced set is ONE row per cluster — the
-          // saltBuckets-way explode then replicates almost nothing,
-          // exactly in the late rounds where the comp skew peaks
-          val rhs = stepped.select(col("node").as("c"), col("comp").as("cc"))
-            .join(stepped.select(col("comp").as("c")).distinct(), Seq("c"), "left_semi")
-            .withColumn("_sr",
-              explode(array((0 until saltBuckets).map(lit(_)): _*)))
-          lhs.join(rhs, col("x.comp") === col("c") && col("_sl") === col("_sr"), "left")
-        }
-      val next = ckpt(halved
-        .select(col("x.node").as("node"),
-          least(col("x.comp"), coalesce(col("cc"), col("x.comp"))).as("comp")))
-      // convergence probe (r19, guide §1.2): labels are element-wise
-      // NON-INCREASING (every assignment is a `least`), and the node set
-      // is constant across rounds — so "no label changed" ⟺ "the label
-      // sum is unchanged". A 1-row decimal(38,0) aggregation of `next`
-      // alone (exact up to 10^38 — no overflow at any id/graph scale)
-      // replaces the next⋈labels join the old any-changed probe paid
-      // every round; the probe job still materializes the round's lazy
-      // checkpoints, so jobs per round stay 1 with one less join+shuffle
-      // inside.
-      val sumNow = next.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      ckpt.release(labels)
-      ckpt.release(stepped)
-      labels = next
-      converged =
-        if (sumNow == null) true // empty label frame: nothing to propagate
-        else prevSum != null && prevSum.compareTo(sumNow) == 0
-      prevSum = sumNow
-      i += 1
+    // this call, or set from `checkpointDir`) gets executor-loss-proof
+    // rounds without opting in per call
+    val ckpt = new graft.RoundCheckpoint(edges.sparkSession, eagerLocal = false)
+    graft.LoopParallelism(edges.sparkSession, nEdges) {
+      var labels = ckpt(edges.select(col("src").as("node")).distinct()
+        .withColumn("comp", col("node")))
+      var converged = false
+      var i = 0
+      // previous round's label sum for the monotone convergence probe
+      // below; null = "no round measured yet" (and the sum of an EMPTY
+      // label frame, which the null==null clause treats as converged —
+      // the old any-changed probe also stopped after one round there)
+      var prevSum: java.math.BigDecimal = null
+      while (!converged && i < maxIter) {
+        val nbrMin = edges
+          .join(labels.select(col("node").as("dst"), col("comp").as("nbr_comp")), "dst")
+          .groupBy(col("src").as("node")).agg(min("nbr_comp").as("nbr_comp"))
+        val stepped = ckpt(labels.join(nbrMin, Seq("node"), "left")
+          .select(col("node"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp")))
+        // path halving: jump each label to its label's label (comp is always
+        // itself a node id, and labels only decrease, so this preserves
+        // reachability while halving chain lengths). With saltBuckets > 0
+        // the self-join spreads each comp's join group over saltBuckets
+        // tasks (see scaladoc) — identical result, skew-proof shuffle.
+        val halved =
+          if (saltBuckets <= 0)
+            stepped.as("x")
+              .join(stepped.select(col("node").as("c"), col("comp").as("cc")),
+                col("x.comp") === col("c"), "left")
+          else {
+            val lhs = stepped.as("x")
+              .withColumn("_sl", pmod(xxhash64(col("x.node")), lit(saltBuckets)))
+            // replicate only label rows some lhs comp actually references:
+            // dropping a rhs row whose node is nobody's comp changes
+            // nothing (it could never match), and once clusters collapse
+            // the referenced set is ONE row per cluster — the
+            // saltBuckets-way explode then replicates almost nothing,
+            // exactly in the late rounds where the comp skew peaks
+            val rhs = stepped.select(col("node").as("c"), col("comp").as("cc"))
+              .join(stepped.select(col("comp").as("c")).distinct(), Seq("c"), "left_semi")
+              .withColumn("_sr",
+                explode(array((0 until saltBuckets).map(lit(_)): _*)))
+            lhs.join(rhs, col("x.comp") === col("c") && col("_sl") === col("_sr"), "left")
+          }
+        val next = ckpt(halved
+          .select(col("x.node").as("node"),
+            least(col("x.comp"), coalesce(col("cc"), col("x.comp"))).as("comp")))
+        // the probe job also materializes the round's lazy checkpoints, so
+        // jobs per round stay 1
+        val sumNow = labelSum(next)
+        ckpt.release(labels)
+        ckpt.release(stepped)
+        labels = next
+        converged =
+          if (sumNow == null) true // empty label frame: nothing to propagate
+          else prevSum != null && prevSum.compareTo(sumNow) == 0
+        prevSum = sumNow
+        i += 1
+      }
+      edges.unpersist()
+      labels
     }
-    edges.unpersist()
-    labels
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", confParts)
-      conf.set("spark.sql.adaptive.enabled", confAqe)
-    }
+  }
+
+  /** The loop's convergence probe (r19, guide §1.2): labels are
+    * element-wise NON-INCREASING (every assignment is a `least`), and the
+    * node set is constant across rounds — so "no label changed" ⟺ "the
+    * label sum is unchanged". One 1-row aggregate of the frame alone
+    * replaces a next⋈labels join per round: the `decimal(38,0)` sum of
+    * `comp` beside the count of non-null `comp`s. Returns null when there
+    * is no label to sum (an empty frame). A null sum over a non-zero
+    * count is a decimal overflow (non-ANSI `sum` yields null there, and
+    * two nulls would read as "converged"), so it throws instead.
+    */
+  private[graft] def labelSum(labels: DataFrame): java.math.BigDecimal = {
+    val r = labels.agg(sum(col("comp").cast("decimal(38,0)")), count(col("comp"))).head()
+    if (r.isNullAt(0) && r.getLong(1) > 0L)
+      throw new ArithmeticException(
+        s"connectedComponents: label sum over ${r.getLong(1)} labels overflows decimal(38,0)")
+    r.getDecimal(0)
   }
 
   /** End-to-end dedup resolution: given the corpus and a verified

@@ -144,16 +144,15 @@ object MinHashSig {
     }
   }
 
-  /** The shared per-doc pass: token hashes, then either streamed k-gram
-    * hashes (running XXH64, duplicates folded — min is duplicate-blind)
-    * or the <k-token token-hash fallback. Returns null when the doc has
-    * no tokens (the aggregate form emitted no row). When `grams` is
-    * non-null every gram/token hash is also appended to it (for the
-    * distinct count in [[computeWithSize]]).
+  /** The shared per-doc pass over the doc's token hashes `toks`: either
+    * streamed k-gram hashes (running XXH64, duplicates folded — min is
+    * duplicate-blind) or the <k-token token-hash fallback. Returns null when the doc has no tokens (the aggregate form
+    * emitted no row). When `grams` is non-null (sized by [[nGrams]]) the
+    * g-th gram/token hash is also written to `grams(g)` (for the distinct
+    * count in [[computeWithSize]]).
     */
-  private def sigOf(text: UTF8String, k: Int, numHashes: Int,
-                    grams: java.util.ArrayList[java.lang.Long]): Array[Long] = {
-    val toks = ShingleHashes.tokenHashArray(text)
+  private def sigOf(toks: Array[Long], k: Int, numHashes: Int,
+                    grams: Array[Long]): Array[Long] = {
     val nTokens = toks.length
     if (nTokens == 0) return null
     val cs = coeffs(numHashes)
@@ -168,40 +167,42 @@ object MinHashSig {
           j += 1
         }
         fold(sig, cs, h)
-        if (grams != null) grams.add(h)
+        if (grams != null) grams(g) = h
         g += 1
       }
     } else {
       var t = 0
       while (t < nTokens) {
         fold(sig, cs, toks(t))
-        if (grams != null) grams.add(toks(t))
+        if (grams != null) grams(t) = toks(t)
         t += 1
       }
     }
     sig
   }
 
+  /** Gram/token hashes [[sigOf]] folds for a doc of `nTokens` tokens. */
+  private def nGrams(nTokens: Int, k: Int): Int =
+    if (nTokens >= k) nTokens - k + 1 else nTokens
+
   /** Kernel shared by interpreted eval and generated code. */
   def compute(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val sig = sigOf(text, k, numHashes, null)
+    val sig = sigOf(ShingleHashes.tokenHashArray(text), k, numHashes, null)
     if (sig == null) new GenericArrayData(Array.empty[Any])
     else new GenericArrayData(Array[Any](new GenericArrayData(sig)))
   }
 
-  /** [[compute]] plus the exact distinct gram count (sort + unique scan —
-    * no boxed set; matches `count(*)` over exploded `shingle_hashes`,
+  /** [[compute]] plus the exact distinct gram count (a primitive gram
+    * array, sorted + unique scan — nothing boxed; matches `count(*)` over exploded `shingle_hashes`,
     * whose output is per-doc distinct). */
   def computeWithSize(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
-    val grams = new java.util.ArrayList[java.lang.Long]()
-    val sig = sigOf(text, k, numHashes, grams)
+    val toks = ShingleHashes.tokenHashArray(text)
+    val gs = new Array[Long](nGrams(toks.length, k))
+    val sig = sigOf(toks, k, numHashes, gs)
     if (sig == null) return new GenericArrayData(Array.empty[Any])
-    val gs = new Array[Long](grams.size())
-    var i = 0
-    while (i < gs.length) { gs(i) = grams.get(i); i += 1 }
     java.util.Arrays.sort(gs)
     var nset = 0L
-    i = 0
+    var i = 0
     while (i < gs.length) {
       if (i == 0 || gs(i) != gs(i - 1)) nset += 1L
       i += 1

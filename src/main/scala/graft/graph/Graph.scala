@@ -23,14 +23,17 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   *  - the iteration is a fixed unrolled depth, so a DuckDB oracle
   *    replays it as K chained CTEs.
   *
-  * Scale shape (the [[graft.dedup.Dedup.connectedComponents]] contract):
-  * the degree-annotated edge list is persisted ONCE and reused across
-  * rounds; each round is one shuffle on `src` (edges join ranks — both
-  * sides hash-partition on the node id) plus one hash aggregation on
+  * Scale shape (the contract of the [[graft.dedup.Dedup.connectedComponents]]
+  * loop): the degree-annotated edge list is persisted ONCE and reused
+  * across rounds; each round is one shuffle on `src` (edges join ranks —
+  * both sides hash-partition on the node id) plus one hash aggregation on
   * `dst` with map-side partials; every round is checkpointed so the
   * logical plan stays constant-size at any K (lineage otherwise grows
   * with the iteration count), and the superseded round's storage is
-  * released explicitly rather than waiting on the ContextCleaner.
+  * released explicitly rather than waiting on the ContextCleaner. The
+  * loop width follows the edge volume ([[graft.LoopParallelism]]; ranks
+  * are exact integer arithmetic, so the result is bit-identical at any
+  * width).
   */
 object Graph {
 
@@ -77,7 +80,7 @@ object Graph {
       .persist(MEMORY_AND_DISK)
     val nEdges = e.count() // force once, before round-1 plans race to build it twice
     val base = nodes.select(col("node")).withColumn("tp", lit(teleport))
-    withLoopParallelism(e.sparkSession, nEdges) {
+    graft.LoopParallelism(e.sparkSession, nEdges) {
       iterate(e, base, iterations, microScale, damping)
     }
   }
@@ -113,40 +116,8 @@ object Graph {
       .join(distinctSeeds.withColumn("_s", lit(1)), Seq("node"), "left")
       .select(col("node"),
         when(col("_s").isNotNull, lit(perSeed)).otherwise(lit(0L)).as("tp"))
-    withLoopParallelism(e.sparkSession, nEdges) {
+    graft.LoopParallelism(e.sparkSession, nEdges) {
       iterate(e, base, iterations, microScale, damping)
-    }
-  }
-
-  /** Loop parallelism proportional to the measured edge volume — the
-    * [[graft.dedup.Dedup.connectedComponents]] sizing discipline applied
-    * to the K-round graph loops (r18 optimization, guide §2.2): each
-    * round's joins/aggregations are separated from the next by a
-    * checkpoint, which defeats AQE's coalescing, so the loop width must
-    * be chosen here. ~64k edges per reducer, clamped at the session's
-    * configured width — a 100 TB edge list keeps every reducer, while a
-    * small graph stops paying (width × stages × rounds) task-scheduling
-    * overhead (measured at sf0.1: the four g_* entries each run ~2x
-    * faster with 1 loop partition than with 32; ranks are exact integer
-    * arithmetic, so the result is bit-identical at any width). The
-    * session conf is restored in `finally`; the returned frame is
-    * checkpointed, so downstream consumers plan at the caller's width.
-    */
-  private def withLoopParallelism[A](spark: org.apache.spark.sql.SparkSession,
-                                     nEdges: Long)(body: => A): A = {
-    val conf = spark.conf
-    val confParts = conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(confParts.toLong, nEdges / 65536L + 1L))
-    conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    // at 1 loop partition there is nothing for AQE to adapt; its
-    // stage-by-stage re-planning only adds latency to every round job —
-    // the connectedComponents rule (Dedup.scala), shared here
-    val confAqe = conf.get("spark.sql.adaptive.enabled")
-    if (loopParts == 1L) conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally {
-      conf.set("spark.sql.shuffle.partitions", confParts)
-      conf.set("spark.sql.adaptive.enabled", confAqe)
     }
   }
 
@@ -222,7 +193,7 @@ object Graph {
     val ckptEvery = 1
     var labels = base.select(col("node"), col("node").as("label"))
     var prev: Option[DataFrame] = None
-    try withLoopParallelism(base.sparkSession, nEdges) {
+    try graft.LoopParallelism(base.sparkSession, nEdges) {
       for (i <- 1 to iterations) {
         // argmax by (count, min label): max(struct(c, -label)) picks the
         // highest count, then the LEAST label (ids are non-negative, so

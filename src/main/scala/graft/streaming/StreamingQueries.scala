@@ -35,8 +35,8 @@ object StreamingQueries {
     * (r18 optimization, guide §2.2): a streaming stateful operator pins
     * its shuffle-partition count when the query starts — AQE is disabled
     * on streams, so the width must be sized HERE, to the stream's input
-    * volume, the same way [[graft.dedup.Dedup.connectedComponents]]
-    * sizes its loop. One state partition per
+    * volume, the same way [[graft.LoopParallelism]] sizes the
+    * checkpointed graph loops. One state partition per
     * `SPARK_GRAFT_STREAM_PART_BYTES` of input (default 32 MiB — the
     * state-store-commit analog of a ~128 MB scan task given that state
     * is a reduction of input), clamped to [1, session width]: a 100 TB

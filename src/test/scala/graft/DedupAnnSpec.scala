@@ -492,9 +492,9 @@ class DedupAnnSpec extends GraftTest {
     // concentrates one comp value), a chain, and a plain pair
     val pairs = ((1L to 40L).map(i => (0L, i)) ++
       Seq((100L, 101L), (101L, 102L), (200L, 201L))).toDF("a", "b")
-    val plain = Dedup.connectedComponents(pairs).collect()
+    val plain = Dedup.connectedComponentsLoop(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Dedup.connectedComponents(pairs, saltBuckets = 4).collect()
+    val salted = Dedup.connectedComponentsLoop(pairs, saltBuckets = 4).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(salted === plain, "salting is an execution-strategy switch, not a semantic one")
     assert((0L to 40L).forall(n => salted(n) == 0L))
@@ -511,9 +511,9 @@ class DedupAnnSpec extends GraftTest {
     try {
       val pairs = ((2L, 1L) +: (2L, 3L) +: (10L, 11L) +:
         (100L until 160L).map(i => (i, i + 1))).toDF("a", "b")
-      val local = Dedup.connectedComponents(pairs).collect()
+      val local = Dedup.connectedComponentsLoop(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val reliable = Dedup.connectedComponents(pairs,
+      val reliable = Dedup.connectedComponentsLoop(pairs,
           checkpointDir = Some(dir.getAbsolutePath)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reliable === local, "checkpoint mode must not change the result")
@@ -541,7 +541,7 @@ class DedupAnnSpec extends GraftTest {
       // checkpointDir = None, but the session has a checkpoint store →
       // rounds must go through it (reliable), visible as surviving
       // final-round checkpoint files under the dir
-      val labels = Dedup.connectedComponents(pairs).collect()
+      val labels = Dedup.connectedComponentsLoop(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((100L to 120L).forall(n => labels(n) == 100L))
       def rddDirs(f: java.io.File): Int =
@@ -552,10 +552,10 @@ class DedupAnnSpec extends GraftTest {
       // redirecting the global setting to a DIFFERENT dir must throw, not
       // silently re-point unrelated jobs' checkpoints
       intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs, checkpointDir = Some(other.getAbsolutePath))
+        Dedup.connectedComponentsLoop(pairs, checkpointDir = Some(other.getAbsolutePath))
       }
       // the SAME dir is accepted (no-op against the existing setting)
-      val again = Dedup.connectedComponents(pairs,
+      val again = Dedup.connectedComponentsLoop(pairs,
           checkpointDir = Some(dir.getAbsolutePath)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(again === labels)
@@ -566,6 +566,80 @@ class DedupAnnSpec extends GraftTest {
       }
       rm(dir); rm(other)
     }
+  }
+
+  test("connected components: driver union-find equals the loop (rows and schema)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(Option(_).map(_.toString).orNull)).sortBy(_.mkString(",")).toSeq
+    def same(name: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val driver = Dedup.connectedComponents(pairs)
+      val loop = Dedup.connectedComponentsLoop(pairs)
+      assert(driver.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"$name: a small graph must take the driver path")
+      assert(driver.schema === loop.schema, s"$name: schema")
+      assert(sorted(driver) === sorted(loop), s"$name: rows")
+    }
+    // a 50-node chain in shuffled order, a 30-leaf star whose hub is
+    // not the minimum, and sparse random graphs (many small components)
+    val chain = rnd.shuffle((0L until 50L).map(i => (i + 1000L, i + 1001L)))
+    val star = (1L to 30L).map(i => (500L, 480L + i))
+    def random(nodes: Int, edges: Int) =
+      Seq.fill(edges)((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+    same("chain", chain.toDF("a", "b"))
+    same("star", star.toDF("a", "b"))
+    for (t <- 1 to 3) same(s"random long $t", random(200, 150).toDF("a", "b"))
+    same("random int", random(300, 200).map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b"))
+    same("mixed int", (chain ++ star ++ random(100, 60))
+      .map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b"))
+    same("empty", Seq.empty[(Long, Long)].toDF("a", "b"))
+    // nullable ids: a null endpoint joins nothing in the loop and keeps a
+    // (null, null) row
+    same("nullable", (Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L))) ++
+      random(40, 30).map { case (a, b) => (Some(a), Some(b)) }).toDF("a", "b"))
+  }
+
+  test("connected components: a small graph under a checkpoint dir writes no checkpoint files") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-drvckpt-").toFile
+    try {
+      val pairs = ((1L, 2L) +: (100L until 120L).map(i => (i, i + 1))).toDF("a", "b")
+      val labels = Dedup.connectedComponents(pairs,
+          checkpointDir = Some(dir.getAbsolutePath)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the checkpointDir side effect still happens in the driver regime
+      assert(spark.sparkContext.getCheckpointDir.isDefined)
+      def rddDirs(f: java.io.File): Int =
+        Option(f.listFiles()).map(_.count(_.getName.startsWith("rdd-"))).getOrElse(0)
+      val inner = Option(dir.listFiles()).toSeq.flatten.filter(_.isDirectory)
+      assert(!inner.exists(rddDirs(_) > 0), s"driver path checkpointed: ${inner.toSeq}")
+      val loop = Dedup.connectedComponentsLoop(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels === loop)
+      assert(labels(2L) == 1L && (100L to 120L).forall(n => labels(n) == 100L))
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
+
+  test("connected components: the convergence probe throws on decimal overflow, not 'converged'") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+    // two decimal(38,0) labels of 6e37 each: both fit, their sum does not
+    val big = new java.math.BigDecimal("60000000000000000000000000000000000000")
+    val overflow = spark.createDataFrame(java.util.Arrays.asList(Row(big), Row(big)),
+      StructType(Seq(StructField("comp", DecimalType(38, 0)))))
+    assert(overflow.where(col("comp").isNotNull).count() === 2L)
+    intercept[ArithmeticException](Dedup.labelSum(overflow))
+    assert(Dedup.labelSum(Seq.empty[Long].toDF("comp")) === null)
+    assert(Dedup.labelSum(Seq(3L, 4L).toDF("comp")).longValueExact() === 7L)
   }
 
   test("verifyJaccardWithSets narrows sets to (vid, toks) on both intersection paths") {
