@@ -973,8 +973,7 @@ object ScaleCheck {
       // join group — saltBuckets spreads it (identical output, asserted
       // in DedupAnnSpec). Both flavors measured so SCALE.md records when
       // the salt starts paying (replicating the slim label frame vs the
-      // one hot task); below 65,536 edges both take the driver union-find,
-      // where salting does not apply, so those rows tie.
+      // one hot task).
       def resolveMega(salt: Int) = {
         val cand = Dedup.minhashPairs(skewDocs, "doc_id", "text", 0.5,
           maxBucket = 100).select("a", "b")

@@ -1088,6 +1088,8 @@ object Dedup {
     * CLUSTERS (a~b, b~c ⇒ {a,b,c}), and each document maps to its
     * cluster's canonical id (the minimum member id, so `comp` doubles as
     * the keep-id). Output: (node, comp), both in the input id type.
+    * Ids must be integral or `decimal(p,0)`; any other type throws
+    * `IllegalArgumentException` before any work.
     *
     * Two regimes, chosen by the measured volume of the undirected edge
     * list (both directions of every distinct pair):
@@ -1101,7 +1103,7 @@ object Dedup {
     *    recomputable. The suite's capped pair sets land here at the
     *    benchmarked scales; the loop would run them on one reducer
     *    anyway, paying a scheduled job and a checkpoint per round.
-    *  - otherwise (and for non-integral ids) the distributed loop below
+    *  - otherwise (and for `decimal(p,0)` ids) the distributed loop below
     *    runs, on a width proportional to the edge volume. The driver sees
     *    only a one-row convergence probe per round, never the data.
     *    `maxIter`, `saltBuckets` and the per-round checkpoints apply to
@@ -1184,7 +1186,7 @@ object Dedup {
   }
 
   /** Id types the driver regime handles: integral, so the round trip
-    * through `long` is lossless. */
+    * through `long` is lossless. `decimal(p,0)` ids take the loop. */
   private val driverIdTypes: Set[org.apache.spark.sql.types.DataType] = {
     import org.apache.spark.sql.types._
     Set(ByteType, ShortType, IntegerType, LongType)
@@ -1196,6 +1198,16 @@ object Dedup {
   private def componentEdges(pairs: DataFrame,
                              checkpointDir: Option[String]): (DataFrame, Long) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import org.apache.spark.sql.types._
+    // the labels are min-ids and the loop's convergence probe sums them
+    // as decimal(38,0): only whole-number ids have a meaningful sum
+    for (c <- Seq("a", "b")) pairs.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case d: DecimalType if d.scale == 0 =>
+      case t => throw new IllegalArgumentException(
+        s"connectedComponents: pair column $c has type ${t.simpleString}; " +
+          "ids must be integral or decimal(p,0)")
+    }
     val sc = pairs.sparkSession.sparkContext
     val existingDir = sc.getCheckpointDir
     checkpointDir.foreach { d =>

@@ -642,6 +642,13 @@ class DedupAnnSpec extends GraftTest {
     assert(Dedup.labelSum(Seq(3L, 4L).toDF("comp")).longValueExact() === 7L)
   }
 
+  test("connected components: non-integral ids are rejected up front") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(Seq(("x", "y")).toDF("a", "b")))
+    assert(e.getMessage.contains("string"))
+  }
+
   test("verifyJaccardWithSets narrows sets to (vid, toks) on both intersection paths") {
     import spark.implicits._
     // array<bigint> takes the sorted-merge kernel, array<string> the

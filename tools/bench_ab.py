@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of the benchmark of record.
 
-    python3 tools/bench_ab.py <parent-rev> <workload> <pairs> [--seed N] [--seconds S]
+    python3 tools/bench_ab.py <parent-rev> <workload> <pairs> [--seed N]
 
 Run from the root of a graft checkout: that checkout (its working tree)
 is the change side. The committed files of <parent-rev> are exported
@@ -9,13 +9,14 @@ into a fresh directory under /tmp (git archive, so the repository gets
 no worktree entry) and are the parent side. Pair i runs
 `perfbench/run.py --workload <workload> --seed <N+i> --trace 0` once on
 each side, parent first on even pairs and change first on odd ones, so
-machine drift hits both sides alike. `--seconds` defaults to
-BENCHMARK.json's `run_seconds`.
+machine drift hits both sides alike. Every run lasts BENCHMARK.json's
+`run_seconds`, the same on both sides.
 
 Prints each side's median and quartiles for every end-to-end metric in
 BENCHMARK.json, the change's pair wins (ties count for neither side)
 and whether the gain rule holds: wins in at least nine tenths of the
-pairs and a median gap wider than the parent's interquartile range.
+pairs, a median gap wider than the parent's interquartile range and no
+more failed runs on the change side than on the parent side.
 The last line is the same summary as one JSON object. Nothing under
 perfbench/ is modified; each side builds into its own `.bench_build/`.
 """
@@ -60,12 +61,11 @@ def main():
     ap.add_argument("workload")
     ap.add_argument("pairs", type=int)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=None)
     args = ap.parse_args()
 
     change = os.getcwd()
     bench = json.load(open(os.path.join(change, "BENCHMARK.json")))
-    seconds = args.seconds if args.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     tmp = tempfile.mkdtemp(prefix="bench_ab-", dir="/tmp")
     parent = os.path.join(tmp, "parent")
     os.makedirs(parent)
@@ -112,7 +112,8 @@ def main():
         cq = quartiles([c for _, c in pairs])
         wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
         gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
-        gain = wins >= 0.9 * args.pairs and gap > pq[2] - pq[0]
+        gain = (wins >= 0.9 * args.pairs and gap > pq[2] - pq[0]
+                and summary["failed_runs"]["change"] <= summary["failed_runs"]["parent"])
         summary["metrics"][name] = {"parent": pq, "change": cq, "wins": wins,
                                     "complete_pairs": len(pairs), "gain": gain}
         pf, cf = ("/".join(f"{x:.4g}" for x in q) for q in (pq, cq))
